@@ -65,21 +65,8 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
     )
     sets = lp.groupBy("o").agg(F.sort_array(F.collect_set("p")).alias("ps"))
-    pair_structs = F.flatten(
-        F.transform(
-            "ps",
-            lambda x, i: F.transform(
-                F.slice(
-                    "ps",
-                    i + F.lit(2),
-                    F.greatest(F.size("ps") - i - F.lit(1), F.lit(0)),
-                ),
-                lambda y: F.struct(x.alias("u"), y.alias("v")),
-            ),
-        )
-    )
     return (
-        sets.select(F.explode(pair_structs).alias("e"))
+        sets.select(F.explode(_center_pair_structs("ps", "u", "v")).alias("e"))
         .select(F.col("e.u").alias("u"), F.col("e.v").alias("v"))
         .distinct()
     )
@@ -804,12 +791,13 @@ def graph_jaccard_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_linkpred_scores(_copurchase_edges(spark, sf_dir))
 
 
-def _center_pair_structs(col: str) -> "F.Column":
-    """All a < b pairs of a SORTED array column, as structs — the
-    map-side expansion shared by the common-neighbor keys (r15) and
-    the co-purchase edge build (r14): per-group pair fan-out is
-    bounded (≤ C(cap, 2)), so one collect_set aggregate replaces a
-    self-equi-join's two exchange+sort sides outright (guide §2.4)."""
+def _center_pair_structs(col: str, lo: str = "a", hi: str = "b") -> "F.Column":
+    """All ``lo`` < ``hi`` pairs of a SORTED array column, as structs
+    with those field names — the map-side expansion shared by the
+    common-neighbor keys (r15) and the co-purchase edge build (r14):
+    per-group pair fan-out is bounded (≤ C(cap, 2)), so one collect_set
+    aggregate replaces a self-equi-join's two exchange+sort sides
+    outright (guide §2.4)."""
     return F.flatten(
         F.transform(
             col,
@@ -819,7 +807,7 @@ def _center_pair_structs(col: str) -> "F.Column":
                     i + F.lit(2),
                     F.greatest(F.size(col) - i - F.lit(1), F.lit(0)),
                 ),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
+                lambda y: F.struct(x.alias(lo), y.alias(hi)),
             ),
         )
     )

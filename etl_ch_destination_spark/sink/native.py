@@ -22,14 +22,15 @@ the public clickhouse-driver implementations). Block layout:
                                              (0 / empty string) — unlike
                                              RowBinary, which omits them
 
-Scalar byte encodings are shared with ``rowbinary`` (same type map:
-Date32 Int32 days, DateTime64(6) Int64 µs, Decimal scaled-int by
-precision) so the two formats cannot drift apart. ``Array(T)`` of a
-flat element type is supported via Native's offsets layout (UInt64
-cumulative end-offsets, then flattened elements) — the shape the
+Scalar byte encodings AND decodings are shared with ``rowbinary``
+(same type map: Date32 Int32 days, DateTime64(6) Int64 µs, Decimal
+scaled-int by precision) and LEB128 comes from ``sink/wire.py``, so
+the two formats cannot drift apart. ``Array(T)`` of a flat element
+type is supported via Native's offsets layout (UInt64 cumulative
+end-offsets, then flattened elements) — the shape the
 ``embeddings.embedding`` array<float> egress needs. Nested
-arrays/maps/structs stay with ``rowbinary_blocks`` (row-wise); this
-encoder raises for them explicitly.
+arrays/maps/structs stay with ``rowbinary_blocks`` (row-wise); the
+encoder and decoder both raise for them explicitly.
 
 Scale notes: same egress shape as rowbinary_blocks — per-partition
 encoding, `plan_insert_blocks`-sized blocks, one `dedup_token` per
@@ -39,6 +40,7 @@ batch, still embarrassingly parallel.
 
 from __future__ import annotations
 
+import struct
 from collections.abc import Iterable, Iterator
 
 from pyspark.sql import DataFrame
@@ -52,7 +54,13 @@ from pyspark.sql.types import (
 )
 
 from etl_ch_destination_spark.sink.clickhouse import ch_type
-from etl_ch_destination_spark.sink.rowbinary import _encode_nonnull, _is_null, varint
+from etl_ch_destination_spark.sink.rowbinary import (
+    _decode_nonnull,
+    _encode_nonnull,
+    _is_null,
+    _read_sized,
+)
+from etl_ch_destination_spark.sink.wire import read_uvarint, write_uvarint
 
 # Worker processes may not be able to import this package (the driver
 # contract runs from an arbitrary cwd — same reasoning as
@@ -109,6 +117,17 @@ def _default_value(dt: DataType):
     raise TypeError(f"no Native default for {dt.simpleString()}")
 
 
+def _require_flat(dt: DataType) -> None:
+    """Native covers flat columns and arrays of flat elements; maps,
+    structs and nested arrays stay with the row-wise RowBinary codec."""
+    inner = dt.elementType if isinstance(dt, ArrayType) else dt
+    if isinstance(inner, (ArrayType, MapType, StructType)):
+        raise TypeError(
+            "Native format covers flat columns and flat arrays only; use "
+            f"rowbinary_blocks for {dt.simpleString()}"
+        )
+
+
 def encode_native_column(dt: DataType, nullable: bool, values: list) -> bytes:
     """One column's data section (null mask + column-wise values).
 
@@ -117,12 +136,8 @@ def encode_native_column(dt: DataType, nullable: bool, values: list) -> bytes:
     element data — the shape the ``embeddings.embedding``
     (array<float>) egress needs. Nested arrays / maps / structs stay
     with the row-wise encoder."""
+    _require_flat(dt)
     if isinstance(dt, ArrayType):
-        if isinstance(dt.elementType, (ArrayType, MapType, StructType)):
-            raise TypeError(
-                "Native encoder covers flat array elements only; use "
-                f"rowbinary_blocks for {dt.simpleString()}"
-            )
         # CH forbids Nullable(Array) (the array itself is never null)
         # but allows Array(Nullable(T)): when the Spark schema's
         # containsNull is set, ch_type declares Nullable elements and
@@ -151,11 +166,6 @@ def encode_native_column(dt: DataType, nullable: bool, values: list) -> bytes:
         for e in elems:
             out += _encode_nonnull(dt.elementType, e)
         return bytes(out)
-    if isinstance(dt, (MapType, StructType)):
-        raise TypeError(
-            f"Native encoder covers flat columns only; use rowbinary_blocks "
-            f"for {dt.simpleString()}"
-        )
     out = bytearray()
     if nullable:
         out += bytes(1 if _is_null(v) else 0 for v in values)
@@ -180,13 +190,13 @@ def encode_native_block(schema: StructType, rows: Iterable) -> bytes:
                 f"row width {len(r)} != schema width {len(schema.fields)}"
             )
     out = bytearray()
-    out += varint(len(schema.fields))
-    out += varint(len(mat))
+    out += write_uvarint(len(schema.fields))
+    out += write_uvarint(len(mat))
     for i, f in enumerate(schema.fields):
         name = f.name.encode("utf-8")
-        out += varint(len(name)) + name
+        out += write_uvarint(len(name)) + name
         typ = ch_type(f.dataType, f.nullable).encode("utf-8")
-        out += varint(len(typ)) + typ
+        out += write_uvarint(len(typ)) + typ
         out += encode_native_column(f.dataType, f.nullable, [r[i] for r in mat])
     return bytes(out)
 
@@ -259,65 +269,6 @@ def native_blocks(
 # ---------------------------------------------------------------------------
 
 
-def _decode_fixed(dt: DataType, buf: bytes, pos: int):
-    from pyspark.sql.types import (
-        BooleanType,
-        ByteType,
-        DateType,
-        DecimalType,
-        DoubleType,
-        FloatType,
-        IntegerType,
-        LongType,
-        ShortType,
-        TimestampType,
-    )
-    import datetime as _dt
-    import decimal as _decimal
-    import struct as _struct
-
-    if isinstance(dt, ByteType):
-        return _struct.unpack_from("<b", buf, pos)[0], pos + 1
-    if isinstance(dt, ShortType):
-        return _struct.unpack_from("<h", buf, pos)[0], pos + 2
-    if isinstance(dt, IntegerType):
-        return _struct.unpack_from("<i", buf, pos)[0], pos + 4
-    if isinstance(dt, LongType):
-        return _struct.unpack_from("<q", buf, pos)[0], pos + 8
-    if isinstance(dt, FloatType):
-        return _struct.unpack_from("<f", buf, pos)[0], pos + 4
-    if isinstance(dt, DoubleType):
-        return _struct.unpack_from("<d", buf, pos)[0], pos + 8
-    if isinstance(dt, BooleanType):
-        return buf[pos] == 1, pos + 1
-    if isinstance(dt, (StringType, BinaryType)):
-        n, pos = _read_varint(buf, pos)
-        raw = buf[pos : pos + n]
-        return (raw.decode("utf-8") if isinstance(dt, StringType) else bytes(raw)), pos + n
-    if isinstance(dt, DateType):
-        days = _struct.unpack_from("<i", buf, pos)[0]
-        return _dt.date(1970, 1, 1) + _dt.timedelta(days=days), pos + 4
-    if isinstance(dt, TimestampType):
-        micros = _struct.unpack_from("<q", buf, pos)[0]
-        return _dt.datetime(1970, 1, 1) + _dt.timedelta(microseconds=micros), pos + 8
-    if isinstance(dt, DecimalType):
-        w = 4 if dt.precision <= 9 else 8 if dt.precision <= 18 else 16
-        raw = int.from_bytes(buf[pos : pos + w], "little", signed=True)
-        return _decimal.Decimal(raw).scaleb(-dt.scale), pos + w
-    raise TypeError(f"no Native decoding for {dt.simpleString()}")
-
-
-def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    shift = n = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        n |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return n, pos
-        shift += 7
-
-
 def decode_native_block(schema: StructType, payload: bytes) -> list[tuple]:
     """Parse a Native block back into row tuples under ``schema``.
 
@@ -326,55 +277,48 @@ def decode_native_block(schema: StructType, payload: bytes) -> list[tuple]:
     column is an error, not a silent reinterpretation), re-applies
     null masks, and rebuilds Array(T) columns from the cumulative
     offsets layout. Raises on trailing bytes."""
-    pos = 0
-    n_cols, pos = _read_varint(payload, pos)
-    n_rows, pos = _read_varint(payload, pos)
-    if n_cols != len(schema.fields):
-        raise ValueError(f"block has {n_cols} columns, schema {len(schema.fields)}")
-    cols: list[list] = []
     for f in schema.fields:
-        ln, pos = _read_varint(payload, pos)
-        name = payload[pos : pos + ln].decode("utf-8")
-        pos += ln
-        if name != f.name:
-            raise ValueError(f"column name {name!r} != schema {f.name!r}")
-        lt, pos = _read_varint(payload, pos)
-        typ = payload[pos : pos + lt].decode("utf-8")
-        pos += lt
-        expect = ch_type(f.dataType, f.nullable)
-        if typ != expect:
-            raise ValueError(f"column {name}: type {typ!r} != {expect!r}")
-        if isinstance(f.dataType, ArrayType):
-            offsets = []
-            for _ in range(n_rows):
-                offsets.append(int.from_bytes(payload[pos : pos + 8], "little"))
-                pos += 8
-            total = offsets[-1] if offsets else 0
-            elem_nulls = [False] * total
-            if f.dataType.containsNull:
-                # Array(Nullable(T)): flattened element null mask
-                # sits between the offsets and the element data
-                elem_nulls = [payload[pos + i] == 1 for i in range(total)]
-                pos += total
-            elems = []
-            for i in range(total):
-                v, pos = _decode_fixed(f.dataType.elementType, payload, pos)
-                elems.append(None if elem_nulls[i] else v)
-            vals, start = [], 0
-            for end in offsets:
-                vals.append(elems[start:end])
-                start = end
-            cols.append(vals)
-            continue
-        nulls = [False] * n_rows
-        if f.nullable:
-            nulls = [payload[pos + i] == 1 for i in range(n_rows)]
-            pos += n_rows
-        vals = []
-        for i in range(n_rows):
-            v, pos = _decode_fixed(f.dataType, payload, pos)
-            vals.append(None if nulls[i] else v)
-        cols.append(vals)
+        _require_flat(f.dataType)
+    pos = 0
+    try:
+        n_cols, pos = read_uvarint(payload, pos)
+        n_rows, pos = read_uvarint(payload, pos)
+        if n_cols != len(schema.fields):
+            raise ValueError(f"block has {n_cols} columns, schema {len(schema.fields)}")
+        cols = [None] * n_cols
+        for c, f in enumerate(schema.fields):
+            raw, pos = _read_sized(payload, pos)
+            name = raw.decode("utf-8")
+            if name != f.name:
+                raise ValueError(f"column name {name!r} != schema {f.name!r}")
+            raw, pos = _read_sized(payload, pos)
+            typ = raw.decode("utf-8")
+            expect = ch_type(f.dataType, f.nullable)
+            if typ != expect:
+                raise ValueError(f"column {name}: type {typ!r} != {expect!r}")
+            dt, nullable, n, offsets = f.dataType, f.nullable, n_rows, None
+            if isinstance(dt, ArrayType):
+                # cumulative end offsets, then the flattened elements
+                # (with their own null mask for Array(Nullable(T)))
+                offsets = struct.unpack_from(f"<{n_rows}Q", payload, pos)
+                pos += 8 * n_rows
+                dt, nullable = dt.elementType, dt.containsNull
+                n = offsets[-1] if offsets else 0
+            mask = b""
+            if nullable:
+                mask = payload[pos : pos + n]
+                if len(mask) != n:
+                    raise ValueError(f"column {name}: truncated null mask")
+                pos += n
+            vals = []
+            for i in range(n):
+                v, pos = _decode_nonnull(dt, payload, pos)
+                vals.append(None if mask and mask[i] == 1 else v)
+            if offsets is not None:
+                vals = [vals[s:e] for s, e in zip((0,) + offsets, offsets)]
+            cols[c] = vals
+    except (IndexError, struct.error) as exc:  # a fixed-width read past the end
+        raise ValueError(f"truncated Native block at offset {pos}") from exc
     if pos != len(payload):
         raise ValueError(f"trailing {len(payload) - pos} bytes after last column")
     return [tuple(c[i] for c in cols) for i in range(n_rows)]

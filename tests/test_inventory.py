@@ -299,3 +299,18 @@ def test_regression_cohort_immune_to_future_rounds(tmp_path):
     assert regression_cohort(str(scratch), 50, set(), max_round=11) == before
     # and the uncapped view does see the new round
     assert max(driver_rows(str(scratch)).values()) == 99
+
+
+def test_leb128_loop_lives_only_in_sink_wire():
+    """Every codec reads and writes LEB128 / zigzag varints through
+    ``sink/wire.py``: the continuation mask appears in no other
+    package module, so a private copy of the loop cannot creep back."""
+    import pathlib
+
+    pkg = pathlib.Path("etl_ch_destination_spark")
+    holders = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if "& 0x7F" in p.read_text()
+    )
+    assert holders == ["sink/wire.py"], holders

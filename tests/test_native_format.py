@@ -25,6 +25,7 @@ from pyspark.sql.types import (
 )
 
 from etl_ch_destination_spark.sink.native import (
+    decode_native_block,
     encode_native_block,
     encode_native_column,
     native_blocks,
@@ -238,6 +239,56 @@ class TestArrays:
         assert pos == len(payload)
         want = [x for r in rows for x in r[1]]
         assert all(abs(a - b) < 1e-6 for a, b in zip(flat, want))
+
+
+class TestDecodeMalformed:
+    """Malformed blocks fail with a clear ValueError at the faulty
+    field — never a bare IndexError / struct.error, and never a silent
+    short slice that only surfaces later as a name mismatch or
+    trailing-byte drift."""
+
+    LONG = StructType([StructField("a", LongType(), False)])
+    STR = StructType([StructField("s", StringType(), False)])
+
+    def test_truncated_and_overlong_varints(self):
+        with pytest.raises(ValueError, match="truncated varint"):
+            decode_native_block(self.LONG, b"\x80")
+        with pytest.raises(ValueError, match="longer than 10 bytes"):
+            decode_native_block(self.LONG, b"\xff" * 10 + b"\x01\x01")
+
+    def test_lengths_past_the_buffer(self):
+        # column name: length 9, one byte present
+        with pytest.raises(ValueError, match="runs past the buffer"):
+            decode_native_block(self.LONG, b"\x01\x01\x09a")
+        # type name: length 32, "Int64" present
+        with pytest.raises(ValueError, match="runs past the buffer"):
+            decode_native_block(self.LONG, b"\x01\x01\x01a\x20Int64")
+        # string value: length 5, two bytes present
+        with pytest.raises(ValueError, match="runs past the buffer"):
+            decode_native_block(self.STR, b"\x01\x01\x01s\x06String\x05ab")
+
+    def test_truncated_fixed_width_data(self):
+        with pytest.raises(ValueError, match="truncated Native block"):
+            decode_native_block(self.LONG, b"\x01\x01\x01a\x05Int64\x00\x00")
+        arr = StructType(
+            [StructField("v", ArrayType(IntegerType(), False), False)]
+        )
+        payload = encode_native_block(arr, [([1, 2],)])
+        assert decode_native_block(arr, payload) == [([1, 2],)]
+        with pytest.raises(ValueError, match="truncated Native block"):
+            decode_native_block(arr, payload[:-1])
+
+    def test_non_flat_columns_rejected_before_parsing(self):
+        from pyspark.sql.types import MapType
+
+        for dt_ in (
+            MapType(StringType(), LongType()),
+            StructType([StructField("x", LongType())]),
+            ArrayType(ArrayType(IntegerType())),
+        ):
+            schema = StructType([StructField("c", dt_, False)])
+            with pytest.raises(TypeError, match="rowbinary_blocks"):
+                decode_native_block(schema, b"")
 
 
 def test_native_export_prelude_constant_is_exact(spark, sf_dir):

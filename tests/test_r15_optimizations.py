@@ -15,13 +15,13 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 # ------------------------------------------------------------------
-# sink/kafka — single-byte-varint fast paths (encode table + inlined
-# decode) must be wire-identical to the general zigzag path
+# sink/wire + sink/kafka — single-byte-varint fast paths (encode table
+# + inlined decode) must be wire-identical to the general zigzag path
 # ------------------------------------------------------------------
 
 
 def test_zigzag_fastpath_wire_identical_and_roundtrip():
-    from etl_ch_destination_spark.sink import kafka as K
+    from etl_ch_destination_spark.sink import wire as W
 
     def zz_ref(n: int) -> bytes:  # the pre-r15 loop, verbatim
         u = (n << 1) ^ (n >> 63)
@@ -37,13 +37,17 @@ def test_zigzag_fastpath_wire_identical_and_roundtrip():
 
     vals = list(range(-70, 70)) + [
         -1, 63, -64, 64, -65, 127, 128, 8191, 8192, -8192,
-        2**31 - 1, -(2**31), 2**62, -(2**62),
+        2**31 - 1, -(2**31), 2**62, -(2**62), 2**63 - 1, -(2**63),
     ]
     for v in vals:
-        enc = K.zz_encode(v)
+        enc = W.write_zigzag(v)
         assert enc == zz_ref(v), v
-        dec, pos = K.zz_decode(enc, 0)
+        dec, pos = W.read_zigzag(enc, 0)
         assert dec == v and pos == len(enc), v
+    # unsigned 2**64 - 1 is the zigzag image of -(2**63): same 10 bytes
+    enc = W.write_uvarint(2**64 - 1)
+    assert enc == zz_ref(-(2**63))
+    assert W.read_uvarint(enc, 0) == (2**64 - 1, len(enc))
 
 
 def test_kafka_parse_fastpath_handles_multibyte_varints():

@@ -595,9 +595,9 @@ def test_avro_crafted_framing_raises():
         avro_schema,
         decode_container,
         encode_container,
-        read_zigzag,
-        zigzag,
     )
+    from etl_ch_destination_spark.sink.wire import read_zigzag
+    from etl_ch_destination_spark.sink.wire import write_zigzag as zigzag
 
     # varint: 10th byte with any bit above bit 0 is out of long range
     evil = bytes([0xFF] * 9 + [0x7F])

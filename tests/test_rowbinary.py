@@ -34,8 +34,8 @@ from etl_ch_destination_spark.sink.rowbinary import (
     encode_value,
     names_types_header,
     rowbinary_blocks,
-    varint,
 )
+from etl_ch_destination_spark.sink.wire import write_uvarint as varint
 
 
 class TestVarint:
@@ -437,6 +437,7 @@ def test_decoder_is_exact_inverse_and_rejects_framing_drift():
     from etl_ch_destination_spark.sink.rowbinary import decode_rows, encode_row
     from pyspark.sql.types import (
         ArrayType,
+        BinaryType,
         BooleanType,
         DecimalType,
         DoubleType,
@@ -474,10 +475,31 @@ def test_decoder_is_exact_inverse_and_rejects_framing_drift():
     ]
     payload = b"".join(encode_row(schema, r) for r in rows)
     assert decode_rows(schema, payload) == rows
-    with pytest.raises((ValueError, IndexError, UnicodeDecodeError, Exception)):
+    with pytest.raises(ValueError):
         decode_rows(schema, payload + b"\x00")
     with pytest.raises(Exception):
         decode_rows(schema, payload[:-1])
+
+    # malformed varints and length prefixes fail with a clear
+    # ValueError at the faulty field — never a bare IndexError, and
+    # never a silent short slice that only surfaces later as
+    # trailing-byte drift
+    s_schema = StructType([StructField("s", StringType(), False)])
+    with pytest.raises(ValueError, match="truncated varint"):
+        decode_rows(s_schema, b"\x80")
+    with pytest.raises(ValueError, match="longer than 10 bytes"):
+        decode_rows(s_schema, b"\xff" * 10 + b"\x01")
+    with pytest.raises(ValueError, match="runs past the buffer"):
+        decode_rows(s_schema, b"\x05ab")
+    b_schema = StructType([StructField("b", BinaryType(), False)])
+    with pytest.raises(ValueError, match="runs past the buffer"):
+        decode_rows(b_schema, b"\x03\x00")
+    d_schema = StructType([StructField("d", DecimalType(12, 2), False)])
+    with pytest.raises(ValueError, match="truncated Decimal"):
+        decode_rows(d_schema, b"\x01\x02\x03")
+    n_schema = StructType([StructField("k", LongType(), True)])
+    with pytest.raises(ValueError, match="truncated RowBinary payload"):
+        decode_rows(n_schema, b"\x00\x01\x02")
 
 
 def test_import_key_round_trips_orders(spark, sf_dir):
