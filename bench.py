@@ -198,6 +198,15 @@ def _calib_once(spark) -> float:
     return time.monotonic() - t0
 
 
+def _codegen_counters(spark) -> tuple[int, float]:
+    """(classes compiled, compile ms) so far in this JVM. Local mode runs
+    driver and executors in one JVM, so this covers every compile."""
+    jvm = spark.sparkContext._jvm
+    hist = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return hist.getCount(), codegen.compileTime() / 1e6
+
+
 def _spawn_cpu_load(n: int) -> list:
     """Background busy-loop processes for --contended runs: measures
     how each key degrades when the host is not idle (the driver's
@@ -255,21 +264,10 @@ def main() -> int:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
 
-    from pyspark.sql import SparkSession
+    from etl_ch_destination_spark.session import ensure_session_defaults, get_spark
 
-    from etl_ch_destination_spark.session import ensure_session_defaults
-
-    spark = (
-        SparkSession.builder.appName("etl-ch-destination-spark-bench")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.shuffle.partitions", shuffle)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="etl-ch-destination-spark-bench", shuffle_partitions=int(shuffle)
     )
     ensure_session_defaults(spark)
     spark.sparkContext.setLogLevel("ERROR")
@@ -295,6 +293,8 @@ def main() -> int:
 
     timings: dict[str, float] = {}
     p95s: dict[str, float] = {}
+    compiles: dict[str, int] = {}
+    compile_ms: dict[str, float] = {}
     for key in bench_keys:
         fn = queries[key]
 
@@ -308,7 +308,11 @@ def main() -> int:
 
         try:
             run()  # warm-up (JIT, code cache, FS cache)
+            n0, ms0 = _codegen_counters(spark)
             samples = sorted(run() for _ in range(N_RUNS))
+            n1, ms1 = _codegen_counters(spark)
+            compiles[key] = n1 - n0
+            compile_ms[key] = round(ms1 - ms0, 1)
             timings[key] = round(statistics.median(samples), 3)
             p95s[key] = round(
                 samples[min(len(samples) - 1, int(0.95 * len(samples)))], 3
@@ -347,12 +351,20 @@ def main() -> int:
         "unit": "sec",
         "queries": timings,
         "queries_p95": p95s,
+        # Janino compiles over each key's timed runs. With the cache
+        # sized to the working set, what remains is AQE renumbering
+        # codegen stages when query stages finish in another order
+        "codegen_compiles": compiles,
+        "codegen_ms": compile_ms,
         "sf": sf_dir,
         "calib_sec": calib_sec,
         "config": {
             "master": f"local[{cpus}]",
             "shuffle_partitions": int(shuffle),
             "aqe": True,
+            "codegen_cache_entries": int(
+                spark.conf.get("spark.sql.codegen.cache.maxEntries")
+            ),
             "runs": N_RUNS,
             "protocol": (
                 "discarded pre-suite JIT priming; then per key: warm-up + "

@@ -20,7 +20,10 @@ def spark():
     from pyspark.sql import SparkSession
 
     from etl_ch_destination_spark.pbcompat import PB_SITE_DIR, ensure_protobuf
-    from etl_ch_destination_spark.session import ensure_session_defaults
+    from etl_ch_destination_spark.session import (
+        CODEGEN_CACHE_ENTRIES,
+        ensure_session_defaults,
+    )
 
     builder = (
         SparkSession.builder.appName("etl-ch-destination-spark-tests")
@@ -29,6 +32,7 @@ def spark():
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
     )
     if ensure_protobuf():
